@@ -48,13 +48,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-    index_component_path,
-)
+from salesforce_prefect_etl_pipeline_spark.operators import index_store
 from salesforce_prefect_etl_pipeline_spark.operators.text import (
     analyzed_tokens,
     analyzed_tokens_py,
@@ -277,8 +275,8 @@ TEXT_INDEX_BUCKETS = 32
 #: instead of failing on missing columns. v2 (r14): batch_id stamps on
 #: postings/positional rows + the posbatches commit marker. v3 (r15):
 #: tombstone retraction batches + versioned compaction snapshots
-#: resolved through the CURRENT pointer (the MinHash index's layout,
-#: dedup.index_component_path). v4 (r16): commit records carry build
+#: resolved through the CURRENT pointer (``index_store``'s layout).
+#: v4 (r16): commit records carry build
 #: provenance (``origin`` = build/append/retract — the replay-dedup
 #: skip is only safe for overwrite-built single-batch indexes, r15
 #: advice), and the positional tier's tombstones split into their own
@@ -287,12 +285,15 @@ TEXT_INDEX_BUCKETS = 32
 TEXT_INDEX_LAYOUT = 4
 
 
-def _comp(index_dir: str, name: str) -> str:
-    """Resolve a text-index component (postings / totals / champions /
-    positional / posbatches / tombstones) through the version pointer —
-    shared with the MinHash index (dedup.index_component_path): flat
-    layout until the first compaction publishes ``versions/v<N>/``."""
-    return index_component_path(index_dir, name)
+#: Resolve a text-index component (postings / totals / champions /
+#: positional / posbatches / tombstones / postombstones) through the
+#: version pointer.
+_comp = index_store.component_path
+
+#: Each tier's commit record -> its own tombstone component (layout
+#: v4), so an overwrite rebuild of one tier resets its tombstones
+#: without de-committing the other's.
+_TOMBSTONES = {"totals": "tombstones", "posbatches": "postombstones"}
 
 
 def _term_bucket_py(term: str) -> int:
@@ -305,6 +306,14 @@ def _term_bucket_py(term: str) -> int:
     return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % TEXT_INDEX_BUCKETS
 
 
+def _term_bucket() -> Column:
+    """The ``term`` column's posting-list partition (md5 bucket)."""
+    return (
+        F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
+        % TEXT_INDEX_BUCKETS
+    ).cast("int")
+
+
 def _postings(docs: DataFrame, analyzer: str = "raw") -> DataFrame:
     t = _ANALYZERS[analyzer][0]("text")
     tok = docs.select(
@@ -313,37 +322,15 @@ def _postings(docs: DataFrame, analyzer: str = "raw") -> DataFrame:
     return (
         tok.groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl"))
-        .withColumn(
-            "bucket",
-            (
-                F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
-                % TEXT_INDEX_BUCKETS
-            ).cast("int"),
-        )
+        .withColumn("bucket", _term_bucket())
     )
 
 
-def _batch_id_agg(docs: DataFrame, prefix: str = "") -> DataFrame:
-    """1-row frame with the batch's content-derived id:
-    md5([prefix:]min_doc_id:max_doc_id:count). Batches hold disjoint
-    doc_ids by contract, so no two batches share a min — the id is
-    unique AND deterministic (no wall clock), keeping rebuilt indexes
-    bit-reproducible. The aggregate touches ONLY ``doc_id``, so
-    Catalyst prunes the scan to that column (no text read, no
-    tokenize — pytest-asserted on the optimized plan)."""
-    parts = ([F.lit(prefix)] if prefix else []) + [
-        F.min("doc_id"),
-        F.max("doc_id"),
-        F.count(F.lit(1)),
-    ]
-    return docs.agg(F.md5(F.concat_ws(":", *parts)).alias("batch_id"))
-
-
 def _batch_totals(docs: DataFrame, analyzer: str = "raw") -> DataFrame:
-    """Per-batch corpus totals + the :func:`_batch_id_agg` id in one
-    frame. No longer on the write path (r15 verdict task 7 —
-    :func:`_write_index_batch` now derives totals from the postings it
-    just wrote instead of tokenizing the corpus a second time); kept
+    """Per-batch corpus totals + the batch id in one frame. No longer
+    on the write path (r15 verdict task 7 — :func:`_write_index_batch`
+    now derives totals from the postings it just wrote instead of
+    tokenizing the corpus a second time); kept
     as the reference aggregate the single-scan derivation is
     pytest-pinned against."""
     return docs.select(
@@ -351,11 +338,7 @@ def _batch_totals(docs: DataFrame, analyzer: str = "raw") -> DataFrame:
     ).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").cast("long").alias("total_len"),
-        F.md5(
-            F.concat_ws(
-                ":", F.min("doc_id"), F.max("doc_id"), F.count(F.lit(1))
-            )
-        ).alias("batch_id"),
+        index_store.batch_id("doc_id"),
     )
 
 
@@ -367,9 +350,7 @@ def _write_index_batch(
     bid: str | None = None,
 ) -> None:
     """The shared stamped two-file write: postings first (every row
-    carrying the batch id), then the 1-row totals record — the commit
-    point. Ordering + stamps make the pair crash-safe (see
-    :func:`build_text_index`).
+    carrying the batch id), then the 1-row totals commit record.
 
     Single corpus scan (r15 verdict task 7 — the old shape tokenized
     the corpus twice, once for totals and once for postings): the
@@ -391,19 +372,12 @@ def _write_index_batch(
     rebuild never inherits retractions aimed at the old corpus — and
     (r15 advice) the tombstone component itself is removed, so a later
     retraction whose content-derived id collides with a stale tombstone
-    batch's cannot resurrect rows that kill live doc_ids.
-
-    The totals row carries build provenance (``origin`` —
-    build/append/retract, r15 advice): probes may skip the replay
-    dedup only for OVERWRITE-built single-batch indexes; an
-    append-created single-batch index (a streamed first micro-batch,
-    torn and replayed) has duplicate rows under one committed id and
-    must still dedup."""
+    batch's cannot resurrect rows that kill live doc_ids."""
     import shutil
 
     spark = docs.sparkSession
     if bid is None:
-        bid = _batch_id_agg(docs).collect()[0]["batch_id"]
+        bid = index_store.collect_batch_id(docs, "doc_id")
     if mode == "overwrite":
         shutil.rmtree(_comp(index_dir, "totals"), ignore_errors=True)
         shutil.rmtree(_comp(index_dir, "tombstones"), ignore_errors=True)
@@ -421,56 +395,56 @@ def _write_index_batch(
         )
         .collect()[0]
     )
-    origin = "build" if mode == "overwrite" else "append"
-    spark.createDataFrame(
-        [(tot["n_docs"], tot["total_len"], bid, origin)],
-        "n_docs long, total_len long, batch_id string, origin string",
-    ).write.mode(mode).parquet(_comp(index_dir, "totals"))
-
-
-def _valid_batches(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(_comp(index_dir, "totals")).select("batch_id")
+    index_store.write_commit(
+        spark,
+        _comp(index_dir, "totals"),
+        mode,
+        bid,
+        "build" if mode == "overwrite" else "append",
+        n_docs=tot["n_docs"],
+        total_len=tot["total_len"],
+    )
 
 
 def _committed_tombstones(
     spark: SparkSession, index_dir: str, marker: str
 ) -> DataFrame | None:
-    """doc_ids retracted from a tier, restricted to COMMITTED retraction
-    batches — committed meaning the batch id appears in the tier's own
-    commit record (``totals`` for the BM25/champion tiers, ``posbatches``
-    for the positional tier), the same tear invariant ingest batches
-    carry. Each tier owns its tombstone component (``tombstones`` vs
-    ``postombstones``, r16 layout v4) so an overwrite rebuild of one
-    tier resets its tombstones without de-committing the other's.
-    Returns None when the index has no tombstone component (the
-    overwhelmingly common case: zero read cost, zero plan change)."""
-    path = _comp(
-        index_dir, "postombstones" if marker == "posbatches" else "tombstones"
-    )
-    if not os.path.isdir(path):
-        return None
-    committed = (
-        spark.read.parquet(_comp(index_dir, marker))
-        .select("batch_id")
-        .dropDuplicates(["batch_id"])
-    )
-    return (
-        spark.read.parquet(path)
-        .join(F.broadcast(committed), "batch_id", "leftsemi")
-        .select("doc_id")
-        .distinct()
+    """doc_ids retracted by committed batches of the tier whose commit
+    record is ``marker`` (``totals`` for the BM25 and champion tiers,
+    ``posbatches`` for the positional tier); None without tombstones."""
+    return index_store.committed_tombstones(
+        spark,
+        _comp(index_dir, _TOMBSTONES[marker]),
+        _comp(index_dir, marker),
+        "doc_id",
     )
 
 
 def _apply_tombstones(
     df: DataFrame, spark: SparkSession, index_dir: str, marker: str
 ) -> DataFrame:
-    """Anti-join a posting-shaped frame against the tier's committed
-    tombstones (no-op without a tombstone component). Deliberately NOT
-    a forced broadcast: retraction sets can grow unboundedly at crawl
-    scale; AQE promotes the anti-join to broadcast while they're small."""
-    tomb = _committed_tombstones(spark, index_dir, marker)
-    return df if tomb is None else df.join(tomb, "doc_id", "anti")
+    """Anti-join a posting-shaped frame against :func:`_committed_tombstones`."""
+    return index_store.drop_tombstones(
+        df,
+        spark,
+        _comp(index_dir, _TOMBSTONES[marker]),
+        _comp(index_dir, marker),
+        "doc_id",
+    )
+
+
+def _corpus_totals(spark: SparkSession, index_dir: str) -> DataFrame:
+    """N and total_len of the live corpus: the append-only per-batch
+    totals rows summed (retraction rows are negative), deduped by
+    batch id so a replayed commit row is harmless."""
+    return (
+        spark.read.parquet(_comp(index_dir, "totals"))
+        .dropDuplicates(["batch_id"])
+        .agg(
+            F.sum("n_docs").alias("n_docs"),
+            F.sum("total_len").cast("long").alias("total_len"),
+        )
+    )
 
 
 def retract_text_index(
@@ -509,25 +483,18 @@ def retract_text_index(
         .agg(
             (-F.count(F.lit(1))).cast("long").alias("n_docs"),
             (-F.sum("dl")).cast("long").alias("total_len"),
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit("retract"),
-                    F.min("doc_id"),
-                    F.max("doc_id"),
-                    F.count(F.lit(1)),
-                )
-            ).alias("batch_id"),
+            index_store.batch_id("doc_id", "retract"),
         )
         .collect()[0]
     )
-    docs.select("doc_id").distinct().withColumn(
-        "batch_id", F.lit(tot["batch_id"])
-    ).write.mode("append").parquet(_comp(index_dir, "tombstones"))
-    docs.sparkSession.createDataFrame(
-        [(tot["n_docs"], tot["total_len"], tot["batch_id"], "retract")],
-        "n_docs long, total_len long, batch_id string, origin string",
-    ).write.mode("append").parquet(_comp(index_dir, "totals"))
+    index_store.write_retraction(
+        docs.select("doc_id").distinct(),
+        tot["batch_id"],
+        _comp(index_dir, "tombstones"),
+        _comp(index_dir, "totals"),
+        n_docs=tot["n_docs"],
+        total_len=tot["total_len"],
+    )
 
 
 def retract_positional_index(docs: DataFrame, index_dir: str) -> None:
@@ -536,25 +503,12 @@ def retract_positional_index(docs: DataFrame, index_dir: str) -> None:
     probe carries no corpus totals, so only doc_ids are needed — the
     'retractpos' prefix keeps the batch id disjoint from the BM25
     tier's, each tier committing its own tombstones independently)."""
-    bid = (
-        docs.agg(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit("retractpos"),
-                    F.min("doc_id"),
-                    F.max("doc_id"),
-                    F.count(F.lit(1)),
-                )
-            ).alias("batch_id")
-        ).collect()[0]["batch_id"]
+    index_store.write_retraction(
+        docs.select("doc_id").distinct(),
+        index_store.collect_batch_id(docs, "doc_id", "retractpos"),
+        _comp(index_dir, "postombstones"),
+        _comp(index_dir, "posbatches"),
     )
-    docs.select("doc_id").distinct().withColumn(
-        "batch_id", F.lit(bid)
-    ).write.mode("append").parquet(_comp(index_dir, "postombstones"))
-    docs.sparkSession.createDataFrame(
-        [(bid, "retract")], "batch_id string, origin string"
-    ).write.mode("append").parquet(_comp(index_dir, "posbatches"))
 
 
 def build_text_index(
@@ -568,15 +522,10 @@ def build_text_index(
     touches every posting of its terms anyway), keeping the index
     maintenance-free under document appends to unrelated terms.
 
-    Crash-safety invariant (r14 advice — the two parquet writes are not
-    atomic together): postings are written FIRST, stamped with the
-    batch's content-derived id, and the totals row lands LAST as the
-    batch's commit record. A crash between the two leaves a postings
-    batch with no totals row; probes reconcile by semi-joining postings
-    against the totals batch ids, so an uncommitted batch is invisible
-    (its docs counted in neither tf/df nor N/total_len) rather than
-    skewing every idf. Totals stay APPEND-ONLY batch rows the probe
-    sums, never a read-modify-write. ``analyzer`` fixes the index's
+    Crash safety is ``index_store``'s tear invariant with ``totals`` as
+    the commit record: a torn batch is counted in neither tf/df nor
+    N/total_len. Totals stay APPEND-ONLY batch rows the probe sums,
+    never a read-modify-write. ``analyzer`` fixes the index's
     tokenizer chain — probes must use the same one (the caller's
     contract; an index dir holds exactly one analyzer's terms)."""
     _write_index_batch(docs, index_dir, "overwrite", analyzer)
@@ -618,12 +567,6 @@ def _champion_recut(postings: DataFrame, m: int) -> DataFrame:
     )
 
 
-#: Committed-id sets small enough to push as a plan-time ``isin``
-#: literal instead of a broadcast semi-join (the similarity-module
-#: constant, lexical edition).
-_BATCH_ISIN_CAP = 128
-
-
 def _reconciled_postings(
     spark: SparkSession,
     index_dir: str,
@@ -631,53 +574,19 @@ def _reconciled_postings(
     terms: list[str] | None = None,
 ) -> DataFrame:
     """The one true posting read every consumer shares: bucket/term
-    pruning pushed BEFORE the scan, committed batches only, replay
-    dedup, and committed tombstones anti-joined out — so probes,
-    champion cuts and compaction all see the identical reconciled
-    corpus.
-
-    Probe hot path kept shuffle-free in the common cases (the r15
-    paired A/B lesson from the vector tier): totals rows are
-    control-plane sized, so the committed ids are collected once and
-    pushed as a plan-time ``isin`` filter when few (falling back to
-    the broadcast semi-join past ``_BATCH_ISIN_CAP``), and the replay
-    dedup — a replayed batch duplicates exactly its
-    (term, doc_id, batch_id) rows — is skipped ONLY for a
-    single-batch index whose one ingest batch is an OVERWRITE build
-    (``origin`` provenance on the totals row, r15 advice: an
-    append-created single-batch index — a streamed first micro-batch,
-    torn and replayed — carries duplicates under one committed id and
-    must still dedup; an overwrite build replaces the directory, so
-    nothing to replay against). Retraction batches are commit records
-    only, no posting rows; dedup keys on the precise triple instead
-    of whole rows."""
+    pruning pushed BEFORE the scan, then ``index_store``'s committed
+    read against the ``totals`` records (replay dedup keyed on the
+    precise (term, doc_id, batch_id) triple rather than whole rows) and
+    committed tombstones anti-joined out — so probes, champion cuts and
+    compaction all see the identical reconciled corpus."""
     p = spark.read.parquet(_comp(index_dir, "postings"))
     if buckets is not None:
         p = p.filter(F.col("bucket").isin([int(b) for b in buckets]))
     if terms is not None:
         p = p.filter(F.col("term").isin(terms))
-    tdf = spark.read.parquet(_comp(index_dir, "totals"))
-    has_origin = "origin" in tdf.columns
-    tot_rows = tdf.select(
-        "batch_id", "n_docs", *(["origin"] if has_origin else [])
-    ).collect()  # one row per batch — control-plane sized
-    committed_ids = sorted({r["batch_id"] for r in tot_rows})
-    ingest = {
-        r["batch_id"]: (r["origin"] if has_origin else None)
-        for r in tot_rows
-        if r["n_docs"] >= 0
-    }
-    single_build = len(ingest) == 1 and set(ingest.values()) == {"build"}
-    if len(committed_ids) <= _BATCH_ISIN_CAP:
-        p = p.filter(F.col("batch_id").isin(committed_ids))
-    else:
-        p = p.join(
-            F.broadcast(_valid_batches(spark, index_dir)),
-            "batch_id",
-            "leftsemi",
-        )
-    if not single_build:
-        p = p.dropDuplicates(["term", "doc_id", "batch_id"])
+    p, _ = index_store.reconcile(
+        spark, p, _comp(index_dir, "totals"), ["term", "doc_id", "batch_id"]
+    )
     return _apply_tombstones(p, spark, index_dir, "totals")
 
 
@@ -732,14 +641,7 @@ def append_champion_lists(
         new_docs.select(
             F.explode(_ANALYZERS[analyzer][0]("text")).alias("term")
         )
-        .select(
-            (
-                F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
-                % TEXT_INDEX_BUCKETS
-            )
-            .cast("int")
-            .alias("bucket")
-        )
+        .select(_term_bucket().alias("bucket"))
         .distinct()
         .collect()  # bounded by TEXT_INDEX_BUCKETS rows
     )
@@ -807,14 +709,7 @@ def probe_champion_lists(
         index_dir,
         "totals",
     )
-    totals = (
-        spark.read.parquet(_comp(index_dir, "totals"))
-        .dropDuplicates(["batch_id"])
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_len").cast("long").alias("total_len"),
-        )
-    )
+    totals = _corpus_totals(spark, index_dir)
     scored = (
         champs.join(F.broadcast(qdf), "term")
         .crossJoin(F.broadcast(totals))
@@ -871,17 +766,7 @@ def probe_text_index(
     tf0 = _reconciled_postings(
         spark, index_dir, buckets=buckets, terms=terms
     ).select("term", "doc_id", "tf", "dl")
-    # per-batch rows summed (append-only totals; see build_text_index);
-    # batch_id dedup makes a replayed totals row harmless too
-    totals = (
-        spark.read.parquet(_comp(index_dir, "totals"))
-        .dropDuplicates(["batch_id"])
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_len").cast("long").alias("total_len"),
-        )
-    )
-    return _score_topk(tf0, qdf, totals, k)
+    return _score_topk(tf0, qdf, _corpus_totals(spark, index_dir), k)
 
 
 def bm25_topk_sql(
@@ -1144,7 +1029,7 @@ def _write_positional_batch(
     if mode == "overwrite":
         shutil.rmtree(_comp(index_dir, "posbatches"), ignore_errors=True)
         shutil.rmtree(_comp(index_dir, "postombstones"), ignore_errors=True)
-    bid = _batch_id_agg(docs).collect()[0]["batch_id"]
+    bid = index_store.collect_batch_id(docs, "doc_id")
     tok = docs.select(
         "doc_id",
         F.posexplode(_ANALYZERS[analyzer][0]("text")).alias("pos", "term"),
@@ -1153,21 +1038,18 @@ def _write_positional_batch(
         tok.groupBy("term", "doc_id")
         .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
         .withColumn("batch_id", F.lit(bid))
-        .withColumn(
-            "bucket",
-            (
-                F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
-                % TEXT_INDEX_BUCKETS
-            ).cast("int"),
-        )
+        .withColumn("bucket", _term_bucket())
     )
     positional.write.mode(mode).partitionBy("bucket").parquet(
         _comp(index_dir, "positional")
     )
-    origin = "build" if mode == "overwrite" else "append"
-    docs.sparkSession.createDataFrame(
-        [(bid, origin)], "batch_id string, origin string"
-    ).write.mode(mode).parquet(_comp(index_dir, "posbatches"))
+    index_store.write_commit(
+        docs.sparkSession,
+        _comp(index_dir, "posbatches"),
+        mode,
+        bid,
+        "build" if mode == "overwrite" else "append",
+    )
 
 
 def build_positional_index(
@@ -1217,37 +1099,14 @@ def probe_phrase_index(
         {t for _, text in queries for t in _ANALYZERS[analyzer][1](text)}
     )
     buckets = sorted({_term_bucket_py(t) for t in terms})
-    # same shuffle-free fast path as _reconciled_postings: literal
-    # committed-id filter when few; the replay dedup is skipped only
-    # for a single-batch OVERWRITE-built tier (origin provenance on
-    # the posbatches rows, r15 advice — an append-created single batch
-    # can carry torn-replay duplicates)
-    pbdf = spark.read.parquet(_comp(index_dir, "posbatches"))
-    has_origin = "origin" in pbdf.columns
-    pb_rows = pbdf.select(
-        "batch_id", *(["origin"] if has_origin else [])
-    ).collect()
-    committed_ids = sorted({r["batch_id"] for r in pb_rows})
-    ingest = {
-        r["batch_id"]: (r["origin"] if has_origin else None)
-        for r in pb_rows
-        if not has_origin or r["origin"] != "retract"
-    }
-    single_build = len(ingest) == 1 and set(ingest.values()) == {"build"}
     tok = (
         spark.read.parquet(_comp(index_dir, "positional"))
         .filter(F.col("bucket").isin([int(b) for b in buckets]))
         .filter(F.col("term").isin(terms))
     )
-    if len(committed_ids) <= _BATCH_ISIN_CAP:
-        tok = tok.filter(F.col("batch_id").isin(committed_ids))
-    else:
-        valid = spark.read.parquet(_comp(index_dir, "posbatches")).select(
-            "batch_id"
-        )
-        tok = tok.join(F.broadcast(valid), "batch_id", "leftsemi")
-    if not single_build:
-        tok = tok.dropDuplicates(["term", "doc_id", "batch_id"])
+    tok, _ = index_store.reconcile(
+        spark, tok, _comp(index_dir, "posbatches"), ["term", "doc_id", "batch_id"]
+    )
     tok = _apply_tombstones(tok, spark, index_dir, "posbatches").select(
         "term", "doc_id", F.explode("positions").alias("pos")
     )
@@ -1278,152 +1137,105 @@ def compact_text_index(
     a compacted index are IDENTICAL (pytest-pinned): compaction changes
     bytes, not rankings.
 
-    Publication is the MinHash compactor's snapshot-isolation shape
-    (dedup.compact_minhash_index): every component is rewritten into
-    ``versions/v<N+1>/`` and becomes live via ONE atomic ``os.replace``
-    of the CURRENT pointer — no window where a live component is
-    missing; a crash anywhere leaves CURRENT on intact data, and an
-    interrupted compaction's orphan dir is simply superseded by the
-    re-run (replay converges). Retention keeps the published and
-    previous versions; the flat build dirs are removed once superseded.
-    Same caveat as the MinHash side: ONE maintenance writer, no
-    concurrent appends during the rewrite (the ingest job and the
-    compactor are the same owner — the reference's operating model).
+    Published as a new version under ``index_store``'s
+    snapshot-isolation contract; tombstones are APPLIED, not copied, so
+    the new version has none.
 
     Returns per-component {before, after} row and parquet-file counts —
     the maintenance job's log line. The new batch ids are
     content-derived ("compact:" + corpus aggregates), so recompacting
     an unchanged index is bit-reproducible."""
-    import shutil
-
-    stats: dict = {}
-    versions_root = os.path.join(index_dir, "versions")
-    cur_pointer = os.path.join(index_dir, "CURRENT")
-    prev_version = ""
-    if os.path.exists(cur_pointer):
-        prev_version = open(cur_pointer).read().strip()
-    existing = (
-        sorted(
-            int(v[1:])
-            for v in os.listdir(versions_root)
-            if v.startswith("v") and v[1:].isdigit()
-        )
-        if os.path.isdir(versions_root)
-        else []
-    )
-    next_v = f"v{(existing[-1] + 1) if existing else 1}"
-    new_root = os.path.join(versions_root, next_v)
-    shutil.rmtree(new_root, ignore_errors=True)
-
-    # --- BM25 tier: committed, replay-deduped, tombstone-free postings
-    # restamped as one batch; totals folded to a single row (negative
-    # retraction rows summed in — the live corpus's exact N/total_len).
-    old_postings = _comp(index_dir, "postings")
-    postings = _reconciled_postings(spark, index_dir)
-    tot = (
-        spark.read.parquet(_comp(index_dir, "totals"))
-        .dropDuplicates(["batch_id"])
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("total_len").cast("long").alias("total_len"),
-        )
-        .collect()[0]
-    )
-    n_postings = postings.count()
     import hashlib
 
-    bid = hashlib.md5(
-        f"compact:{tot['n_docs']}:{tot['total_len']}:{n_postings}".encode()
-    ).hexdigest()
-    stats["postings"] = {
-        "before": spark.read.parquet(old_postings).count(),
-        "after": n_postings,
-        "files_before": _parquet_file_count(old_postings),
-    }
-    (
-        postings.withColumn("batch_id", F.lit(bid))
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(new_root, "postings"))
-    )
-    stats["postings"]["files_after"] = _parquet_file_count(
-        os.path.join(new_root, "postings")
-    )
-    # origin "build": the compacted snapshot is one canonical
-    # overwrite-equivalent batch, so probes skip the replay dedup
-    spark.createDataFrame(
-        [(int(tot["n_docs"]), int(tot["total_len"]), bid, "build")],
-        "n_docs long, total_len long, batch_id string, origin string",
-    ).write.mode("overwrite").parquet(os.path.join(new_root, "totals"))
+    def write_bucketed(df: DataFrame, path: str) -> int:
+        df.repartition("bucket").write.mode("overwrite").partitionBy(
+            "bucket"
+        ).parquet(path)
+        return _parquet_file_count(path)
 
-    # --- champion tier: recut from the compacted corpus when present
-    if os.path.isdir(_comp(index_dir, "champions")):
-        champs = _champion_recut(postings, m)
-        (
-            champs.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(new_root, "champions"))
-        )
-        stats["champions"] = {
-            "after": spark.read.parquet(
-                os.path.join(new_root, "champions")
-            ).count()
+    def write(new_root: str) -> dict:
+        stats: dict = {}
+        # --- BM25 tier: committed, replay-deduped, tombstone-free
+        # postings restamped as one batch; totals folded to a single row
+        # (negative retraction rows summed in — the live corpus's exact
+        # N/total_len).
+        old_postings = _comp(index_dir, "postings")
+        postings = _reconciled_postings(spark, index_dir)
+        tot = _corpus_totals(spark, index_dir).collect()[0]
+        n_postings = postings.count()
+        bid = hashlib.md5(
+            f"compact:{tot['n_docs']}:{tot['total_len']}:{n_postings}".encode()
+        ).hexdigest()
+        stats["postings"] = {
+            "before": spark.read.parquet(old_postings).count(),
+            "after": n_postings,
+            "files_before": _parquet_file_count(old_postings),
         }
-
-    # --- positional tier: same reconcile (posbatches commit ids,
-    # (term, doc_id, batch) replay dedup, tombstones) into one batch
-    if os.path.isdir(_comp(index_dir, "positional")):
-        old_pos = _comp(index_dir, "positional")
-        valid = (
-            spark.read.parquet(_comp(index_dir, "posbatches"))
-            .select("batch_id")
-            .dropDuplicates(["batch_id"])
+        stats["postings"]["files_after"] = write_bucketed(
+            postings.withColumn("batch_id", F.lit(bid)),
+            os.path.join(new_root, "postings"),
         )
-        posi = _apply_tombstones(
-            spark.read.parquet(old_pos)
-            .join(F.broadcast(valid), "batch_id", "leftsemi")
-            .dropDuplicates(["term", "doc_id", "batch_id"]),
+        # origin "build": the compacted snapshot is one canonical
+        # overwrite-equivalent batch, so probes skip the replay dedup
+        index_store.write_commit(
             spark,
-            index_dir,
-            "posbatches",
-        ).drop("batch_id")
-        n_pos = posi.count()
-        pbid = hashlib.md5(f"compactpos:{n_pos}".encode()).hexdigest()
-        stats["positional"] = {
-            "before": spark.read.parquet(old_pos).count(),
-            "after": n_pos,
-            "files_before": _parquet_file_count(old_pos),
-        }
-        (
-            posi.withColumn("batch_id", F.lit(pbid))
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(new_root, "positional"))
+            os.path.join(new_root, "totals"),
+            "overwrite",
+            bid,
+            "build",
+            n_docs=int(tot["n_docs"]),
+            total_len=int(tot["total_len"]),
         )
-        stats["positional"]["files_after"] = _parquet_file_count(
-            os.path.join(new_root, "positional")
-        )
-        spark.createDataFrame(
-            [(pbid, "build")], "batch_id string, origin string"
-        ).write.mode("overwrite").parquet(os.path.join(new_root, "posbatches"))
 
-    # tombstones are APPLIED, not copied: the new version has none.
-    # atomic publish — the pointer replace is the commit point
-    tmp_pointer = os.path.join(index_dir, ".CURRENT.tmp")
-    with open(tmp_pointer, "w") as f:
-        f.write(next_v)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_pointer, cur_pointer)
-    keep = {next_v, prev_version}
-    for v in os.listdir(versions_root):
-        if v not in keep:
-            shutil.rmtree(os.path.join(versions_root, v), ignore_errors=True)
-    if prev_version:  # flat layout superseded at least one publish ago
-        for comp in (
+        # --- champion tier: recut from the compacted corpus when present
+        if os.path.isdir(_comp(index_dir, "champions")):
+            out = os.path.join(new_root, "champions")
+            write_bucketed(_champion_recut(postings, m), out)
+            stats["champions"] = {"after": spark.read.parquet(out).count()}
+
+        # --- positional tier: committed batches, (term, doc_id, batch)
+        # replay dedup and tombstones, into one batch. Reading through
+        # index_store.reconcile instead changes the compaction's job
+        # count (test_text_index_lifecycle_job_counts_are_pinned).
+        if os.path.isdir(_comp(index_dir, "positional")):
+            old_pos = _comp(index_dir, "positional")
+            valid = (
+                spark.read.parquet(_comp(index_dir, "posbatches"))
+                .select("batch_id")
+                .dropDuplicates(["batch_id"])
+            )
+            posi = _apply_tombstones(
+                spark.read.parquet(old_pos)
+                .join(F.broadcast(valid), "batch_id", "leftsemi")
+                .dropDuplicates(["term", "doc_id", "batch_id"]),
+                spark,
+                index_dir,
+                "posbatches",
+            ).drop("batch_id")
+            n_pos = posi.count()
+            pbid = hashlib.md5(f"compactpos:{n_pos}".encode()).hexdigest()
+            stats["positional"] = {
+                "before": spark.read.parquet(old_pos).count(),
+                "after": n_pos,
+                "files_before": _parquet_file_count(old_pos),
+            }
+            stats["positional"]["files_after"] = write_bucketed(
+                posi.withColumn("batch_id", F.lit(pbid)),
+                os.path.join(new_root, "positional"),
+            )
+            index_store.write_commit(
+                spark,
+                os.path.join(new_root, "posbatches"),
+                "overwrite",
+                pbid,
+                "build",
+            )
+        return stats
+
+    return index_store.publish(
+        index_dir,
+        write,
+        (
             "postings",
             "totals",
             "champions",
@@ -1431,9 +1243,8 @@ def compact_text_index(
             "posbatches",
             "tombstones",
             "postombstones",
-        ):
-            shutil.rmtree(os.path.join(index_dir, comp), ignore_errors=True)
-    return stats
+        ),
+    )
 
 
 def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -1488,9 +1299,10 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
             )
         return out
 
-    def _tier_stats(
-        comp: str, marker: str, committed_ids: list[str]
-    ) -> list[tuple]:
+    def _tier_stats(comp: str, marker: str) -> list[tuple]:
+        committed_ids = sorted(
+            index_store.committed_ids(spark, _comp(index_dir, marker))
+        )
         raw = spark.read.parquet(_comp(index_dir, comp)).select(
             "bucket", "term", "doc_id", "batch_id"
         )
@@ -1548,26 +1360,9 @@ def text_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
             for r in per
         ]
 
-    rows: list[tuple] = []
-    tot_ids = sorted(
-        {
-            r["batch_id"]
-            for r in spark.read.parquet(_comp(index_dir, "totals"))
-            .select("batch_id")
-            .collect()
-        }
-    )
-    rows += _tier_stats("postings", "totals", tot_ids)
+    rows = _tier_stats("postings", "totals")
     if os.path.isdir(_comp(index_dir, "positional")):
-        pos_ids = sorted(
-            {
-                r["batch_id"]
-                for r in spark.read.parquet(_comp(index_dir, "posbatches"))
-                .select("batch_id")
-                .collect()
-            }
-        )
-        rows += _tier_stats("positional", "posbatches", pos_ids)
+        rows += _tier_stats("positional", "posbatches")
     if os.path.isdir(_comp(index_dir, "champions")):
         # champions are a derived cache: no batch stamps; live = rows
         # minus committed BM25-tier tombstones

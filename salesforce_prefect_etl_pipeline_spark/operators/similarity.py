@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from salesforce_prefect_etl_pipeline_spark.operators import index_store
+
 
 class SeedReplayError(ValueError):
     """The iters=0 seed quantizer/codebook is the SQL-replayable form
@@ -470,19 +472,6 @@ def semdedup_survivors(
     return av.join(pruned, "vec_id", "left_anti").select("vec_id", "list_id", "rk")
 
 
-def ivf_component_path(index_dir: str, comp: str) -> str:
-    """Resolve an IVF index component (``lists`` / ``centroids``)
-    through the same CURRENT-pointer convention as the MinHash index
-    (dedup.index_component_path): flat layout until the first versioned
-    rebuild publishes ``versions/v<N>``; readers and appenders always
-    resolve through this function."""
-    from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-        index_component_path,
-    )
-
-    return index_component_path(index_dir, comp)
-
-
 def build_ivf_index(
     emb: DataFrame,
     index_dir: str,
@@ -505,10 +494,9 @@ def build_ivf_index(
     ``ann_ivf_probe_exact``); the default Lloyd's-refined quantizer
     trades that replayability for tighter lists.
 
-    A full build SUPERSEDES any versioned history at this path: the
-    CURRENT pointer and versions/ are removed first, else the fresh
-    flat layout would be shadowed by a stale versioned snapshot. The
-    flat tombstone component is removed too (r15 advice): retractions
+    A full build SUPERSEDES any versioned history at this path
+    (``index_store.reset_versions``). The flat tombstone component is
+    removed too (r15 advice): retractions
     were aimed at the superseded corpus, and a later retraction whose
     content-derived batch id collides with a stale tombstone batch's
     must not resurrect rows that kill vectors live in the rebuilt
@@ -516,111 +504,36 @@ def build_ivf_index(
     import os
     import shutil
 
-    if os.path.exists(os.path.join(index_dir, "CURRENT")):
-        os.remove(os.path.join(index_dir, "CURRENT"))
-        shutil.rmtree(os.path.join(index_dir, "versions"), ignore_errors=True)
+    index_store.reset_versions(index_dir)
     shutil.rmtree(os.path.join(index_dir, "tombstones"), ignore_errors=True)
     return _write_ivf_snapshot(emb, index_dir, nlist, iters, seed_emb)
-
-
-def _ivf_batch_id(emb: DataFrame) -> str:
-    """Content-derived batch id for a vector batch (the text tiers'
-    md5(min:max:count) convention, 'ivf'-prefixed): deterministic, no
-    wall clock, identical on replay — the idempotence anchor for
-    streamed appends."""
-    return emb.agg(
-        F.md5(
-            F.concat_ws(
-                ":",
-                F.lit("ivf"),
-                F.min("vec_id"),
-                F.max("vec_id"),
-                F.count(F.lit(1)),
-            )
-        ).alias("batch_id")
-    ).collect()[0]["batch_id"]
-
-
-#: Committed-id sets small enough to push as a plan-time ``isin``
-#: literal instead of a broadcast semi-join. Batch counts are
-#: control-plane sized (one id per ingest batch), so even heavy
-#: streaming stays in the hundreds between compactions.
-_BATCH_ISIN_CAP = 128
 
 
 def _reconciled_lists(spark, index_dir: str, list_ids=None) -> DataFrame:
     """The one true inverted-list read: optional list pruning pushed
     BEFORE the scan, then — when the index carries the stamped layout
-    (a ``vecbatches`` commit-record component) — committed batches
-    only, replay dedup, committed tombstones dropped, batch stamp
-    removed. Unstamped legacy layouts (lists written directly by
-    ``ivf_assign``) pass through untouched, so every pre-r15 index
-    keeps probing identically.
-
-    The probe hot path stays shuffle-free in the common cases (the r15
-    paired A/B caught the naive semi-join + full-row dedup adding
-    ~60% to ann_ivf_probe): committed ids are control-plane sized, so
-    they are collected once and pushed as a PLAN-TIME ``isin`` filter
-    (parquet-scannable) when few; and the replay dedup — only
-    REPLAYED batches can duplicate a (vec_id, batch_id) — is skipped
-    ONLY for a single-batch index whose one ingest batch is an
-    OVERWRITE build (``origin`` provenance on the vecbatches row, r15
-    advice: an append-created single-batch index — a streamed first
-    micro-batch, torn and replayed — carries duplicates under one
-    committed id and must still dedup; an overwrite build replaces the
-    directory, nothing to replay against). Multi-batch indexes dedup
-    on the precise (vec_id, batch_id) key rather than whole rows,
-    sparing the embedding-array comparisons."""
+    (a ``vecbatches`` commit-record component) — ``index_store``'s
+    committed read (replay dedup on (vec_id, batch_id), sparing the
+    embedding-array comparisons), batch stamp removed, committed
+    tombstones dropped. Unstamped legacy layouts (lists written
+    directly by ``ivf_assign``) pass through untouched, so every
+    pre-r15 index keeps probing identically."""
     import os
 
-    df = spark.read.parquet(ivf_component_path(index_dir, "lists"))
+    df = spark.read.parquet(index_store.component_path(index_dir, "lists"))
     if list_ids is not None:
         df = df.filter(F.col("list_id").isin(list_ids))
-    vb = ivf_component_path(index_dir, "vecbatches")
+    vb = index_store.component_path(index_dir, "vecbatches")
     if not os.path.isdir(vb):
         return df
-    vbdf = spark.read.parquet(vb)
-    has_origin = "origin" in vbdf.columns
-    vb_rows = vbdf.select(
-        "batch_id", *(["origin"] if has_origin else [])
-    ).collect()  # one row per batch — control-plane sized
-    committed_ids = sorted({r["batch_id"] for r in vb_rows})
-    ingest = {
-        r["batch_id"]: (r["origin"] if has_origin else None)
-        for r in vb_rows
-        if not has_origin or r["origin"] != "retract"
-    }
-    single_build = len(ingest) == 1 and set(ingest.values()) == {"build"}
-    tomb = ivf_component_path(index_dir, "tombstones")
-    # lists carry only ingest-batch stamps; retraction ids exist solely
-    # as commit records, so the literal filter is exact either way
-    if len(committed_ids) <= _BATCH_ISIN_CAP:
-        df = df.filter(F.col("batch_id").isin(committed_ids))
-    else:
-        committed = (
-            spark.read.parquet(vb)
-            .select("batch_id")
-            .dropDuplicates(["batch_id"])
-        )
-        df = df.join(F.broadcast(committed), "batch_id", "leftsemi")
-    if not single_build:
-        df = df.dropDuplicates(["vec_id", "batch_id"])
-    df = df.drop("batch_id")
-    if os.path.isdir(tomb):
-        # committed retraction batches only (same tear invariant);
-        # not a forced broadcast on the corpus side — retraction sets
-        # grow unboundedly at crawl scale, AQE promotes while small
-        committed_df = spark.createDataFrame(
-            [(b,) for b in committed_ids], "batch_id string"
-        )
-        dead = (
-            spark.read.parquet(tomb)
-            .join(F.broadcast(committed_df), "batch_id", "leftsemi")
-            .select("vec_id")
-            .distinct()
-        )
-        df = df.join(dead, "vec_id", "anti")
-    return df
+    df, ids = index_store.reconcile(spark, df, vb, ["vec_id", "batch_id"])
+    return index_store.drop_tombstones(
+        df.drop("batch_id"),
+        spark,
+        index_store.component_path(index_dir, "tombstones"),
+        ids,
+        "vec_id",
+    )
 
 
 def _write_ivf_snapshot(
@@ -639,13 +552,11 @@ def _write_ivf_snapshot(
     # r15: every write is batch-stamped with a vecbatches commit record
     # (the text tiers' invariant) so streamed appends get exactly-once
     # reads; centroids land LAST — they carry the ensure gates.
-    bid = _ivf_batch_id(emb)
+    bid = index_store.collect_batch_id(emb, "vec_id", "ivf")
     assigned.withColumn("batch_id", F.lit(bid)).write.mode(
         "overwrite"
     ).partitionBy("list_id").parquet(f"{root}/lists")
-    spark.createDataFrame(
-        [(bid, "build")], "batch_id string, origin string"
-    ).write.mode("overwrite").parquet(f"{root}/vecbatches")
+    index_store.write_commit(spark, f"{root}/vecbatches", "overwrite", bid, "build")
     cent_df = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         schema="list_id int, centroid array<double>",
@@ -664,51 +575,16 @@ def rebuild_ivf_index(
     """Periodic retrain + republish — the rebuild cadence that bounds
     the frozen-quantizer drift ``append_ivf_vectors`` documents, made
     SAFE UNDER CONCURRENT PROBES: the fresh snapshot (retrained
-    centroids + fully re-assigned lists) is written into
-    ``versions/v<N+1>/`` and published by one atomic ``os.replace`` of
-    the ``CURRENT`` pointer (the exact commit discipline of
-    ``dedup.compact_minhash_index``). A probe that resolved the old
-    version keeps reading it (current + previous snapshots are
-    retained); a crash leaves CURRENT on intact data. ``build_ivf_index``
-    remains the initial flat-layout build; in-place overwrite rebuilds
-    are exactly the delete-then-write window this exists to remove."""
-    import os
-    import shutil
-
-    versions_root = os.path.join(index_dir, "versions")
-    cur_pointer = os.path.join(index_dir, "CURRENT")
-    prev_version = ""
-    if os.path.exists(cur_pointer):
-        prev_version = open(cur_pointer).read().strip()
-    existing = (
-        sorted(
-            int(v[1:])
-            for v in os.listdir(versions_root)
-            if v.startswith("v") and v[1:].isdigit()
-        )
-        if os.path.isdir(versions_root)
-        else []
+    centroids + fully re-assigned lists) is published as a new version
+    under ``index_store``'s snapshot-isolation contract.
+    ``build_ivf_index`` remains the initial flat-layout build; in-place
+    overwrite rebuilds are exactly the delete-then-write window this
+    exists to remove."""
+    return index_store.publish(
+        index_dir,
+        lambda root: _write_ivf_snapshot(emb, root, nlist, iters, seed_emb),
+        ("lists", "centroids", "vecbatches", "tombstones"),
     )
-    next_v = f"v{(existing[-1] + 1) if existing else 1}"
-    new_root = os.path.join(versions_root, next_v)
-    shutil.rmtree(new_root, ignore_errors=True)
-    cents = _write_ivf_snapshot(emb, new_root, nlist, iters, seed_emb)
-    tmp_pointer = os.path.join(index_dir, ".CURRENT.tmp")
-    with open(tmp_pointer, "w") as f:
-        f.write(next_v)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp_pointer, cur_pointer)
-    keep = {next_v, prev_version}
-    for v in os.listdir(versions_root):
-        if v not in keep:
-            shutil.rmtree(os.path.join(versions_root, v), ignore_errors=True)
-    if prev_version:
-        shutil.rmtree(os.path.join(index_dir, "lists"), ignore_errors=True)
-        shutil.rmtree(os.path.join(index_dir, "centroids"), ignore_errors=True)
-        shutil.rmtree(os.path.join(index_dir, "vecbatches"), ignore_errors=True)
-        shutil.rmtree(os.path.join(index_dir, "tombstones"), ignore_errors=True)
-    return cents
 
 
 def append_ivf_vectors(
@@ -734,25 +610,24 @@ def append_ivf_vectors(
     Rebuild cadence is corpus policy (the IVF analog of LSH index
     compaction); this operator is the between-rebuilds path, and
     :func:`rebuild_ivf_index` is the rebuild itself — retrain +
-    republish under the CURRENT-pointer commit, safe under
-    concurrent probes."""
+    republish, safe under concurrent probes."""
     cents = (
         centroids if centroids is not None else load_ivf_centroids(spark, index_dir)
     )
     assigned = ivf_assign(new_emb, cents)
-    # stamped append + commit record, lists FIRST (r15, the text tiers'
-    # tear invariant): a crash before the vecbatches row leaves an
-    # uncommitted batch probes never see; the replay re-appends
-    # byte-identical rows under the same content-derived id and probes
-    # collapse them by full-row dedup — exactly-once without writer
-    # coordination (what stream_ivf_index_ingest composes on).
-    bid = _ivf_batch_id(new_emb)
+    # stamped lists FIRST, then the vecbatches commit record — the
+    # index_store tear invariant stream_ivf_index_ingest composes on
+    bid = index_store.collect_batch_id(new_emb, "vec_id", "ivf")
     assigned.withColumn("batch_id", F.lit(bid)).write.mode(
         "append"
-    ).partitionBy("list_id").parquet(ivf_component_path(index_dir, "lists"))
-    spark.createDataFrame(
-        [(bid, "append")], "batch_id string, origin string"
-    ).write.mode("append").parquet(ivf_component_path(index_dir, "vecbatches"))
+    ).partitionBy("list_id").parquet(index_store.component_path(index_dir, "lists"))
+    index_store.write_commit(
+        spark,
+        index_store.component_path(index_dir, "vecbatches"),
+        "append",
+        bid,
+        "append",
+    )
     return cents
 
 
@@ -771,7 +646,7 @@ def ivf_list_stats(spark, index_dir: str) -> DataFrame:
     crosses its threshold."""
     lists = _reconciled_lists(spark, index_dir)
     cents = spark.read.parquet(
-        ivf_component_path(index_dir, "centroids")
+        index_store.component_path(index_dir, "centroids")
     ).select("list_id")
     nlist = cents.count()
     per = lists.groupBy("list_id").agg(F.count(F.lit(1)).alias("n_vecs"))
@@ -802,10 +677,9 @@ def rebalance_ivf_index(
     vectors (one read of the lists — no external corpus scan; pass
     ``seed_emb`` to seed from the bounded content-addressed panel, the
     registered iters=0 configuration) and re-assign, published as a new
-    version under the CURRENT pointer (:func:`rebuild_ivf_index`'s
-    atomic-swap machinery — concurrent probes keep reading the retained
-    previous snapshot). Because assignment is a pure function of
-    (vector, centroids), the rebalanced index is BIT-IDENTICAL to a
+    version by :func:`rebuild_ivf_index`. Because assignment is a pure
+    function of (vector, centroids), the rebalanced index is
+    BIT-IDENTICAL to a
     monolithic build over the union corpus with the same seeds
     (pytest-pinned), so recall@nprobe recovers to build-time level by
     construction, not statistically."""
@@ -832,7 +706,7 @@ def retract_ivf_vectors(spark, index_dir: str, vec_ids: DataFrame) -> None:
     rather than leaving a silently half-applied delete."""
     import os
 
-    vb = ivf_component_path(index_dir, "vecbatches")
+    vb = index_store.component_path(index_dir, "vecbatches")
     if not os.path.isdir(vb):
         raise ValueError(
             f"{index_dir} has no vecbatches commit records (pre-r15 "
@@ -842,28 +716,17 @@ def retract_ivf_vectors(spark, index_dir: str, vec_ids: DataFrame) -> None:
     ids = vec_ids.select(
         F.col(vec_ids.columns[0]).cast("long").alias("vec_id")
     ).distinct()
-    bid = ids.agg(
-        F.md5(
-            F.concat_ws(
-                ":",
-                F.lit("retractivf"),
-                F.min("vec_id"),
-                F.max("vec_id"),
-                F.count(F.lit(1)),
-            )
-        ).alias("batch_id")
-    ).collect()[0]["batch_id"]
-    ids.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(
-        ivf_component_path(index_dir, "tombstones")
+    index_store.write_retraction(
+        ids,
+        index_store.collect_batch_id(ids, "vec_id", "retractivf"),
+        index_store.component_path(index_dir, "tombstones"),
+        vb,
     )
-    spark.createDataFrame(
-        [(bid, "retract")], "batch_id string, origin string"
-    ).write.mode("append").parquet(vb)
 
 
 def load_ivf_centroids(spark, index_dir: str) -> np.ndarray:
     rows = (
-        spark.read.parquet(ivf_component_path(index_dir, "centroids"))
+        spark.read.parquet(index_store.component_path(index_dir, "centroids"))
         .orderBy("list_id")
         .collect()
     )
@@ -1066,7 +929,7 @@ def build_ivfpq_codes(
     books_comp = "pqresbooks" if residual else "pqbooks"
     enc = pq_encode(lists, books, passthrough=("list_id",))
     enc.write.mode("overwrite").partitionBy("list_id").parquet(
-        ivf_component_path(index_dir, codes_comp)
+        index_store.component_path(index_dir, codes_comp)
     )
     m, codes, dsub = books.shape
     rows = [
@@ -1077,7 +940,7 @@ def build_ivfpq_codes(
     spark.createDataFrame(
         rows, "subspace int, code int, c array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(
-        ivf_component_path(index_dir, books_comp)
+        index_store.component_path(index_dir, books_comp)
     )
 
 
@@ -1085,7 +948,7 @@ def load_pq_codebooks(
     spark, index_dir: str, comp: str = "pqbooks"
 ) -> np.ndarray:
     rows = (
-        spark.read.parquet(ivf_component_path(index_dir, comp))
+        spark.read.parquet(index_store.component_path(index_dir, comp))
         .orderBy("subspace", "code")
         .collect()
     )
@@ -1135,8 +998,6 @@ def probe_ivfpq(
     scoring joins on (query_id, list_id). The ADC estimate then
     approximates ||q − x||² with the coarse term cancelled, which is
     what buys residual PQ its lower quantization error."""
-    import os
-
     cents = (
         centroids if centroids is not None else load_ivf_centroids(spark, index_dir)
     )
@@ -1205,7 +1066,7 @@ def probe_ivfpq(
     code_cols = [f"code_{s}" for s in range(m)]
     cand = (
         spark.read.parquet(
-            ivf_component_path(
+            index_store.component_path(
                 index_dir, "pqrescodes" if residual else "pqcodes"
             )
         )
@@ -1216,21 +1077,13 @@ def probe_ivfpq(
     )
     # retractions AFTER the codes build: drop committed tombstones at
     # read time (same live view as _reconciled_lists)
-    tomb = ivf_component_path(index_dir, "tombstones")
-    if os.path.isdir(tomb):
-        vb = ivf_component_path(index_dir, "vecbatches")
-        committed = (
-            spark.read.parquet(vb)
-            .select("batch_id")
-            .dropDuplicates(["batch_id"])
-        )
-        dead = (
-            spark.read.parquet(tomb)
-            .join(F.broadcast(committed), "batch_id", "leftsemi")
-            .select("vec_id")
-            .distinct()
-        )
-        cand = cand.join(dead, "vec_id", "anti")
+    cand = index_store.drop_tombstones(
+        cand,
+        spark,
+        index_store.component_path(index_dir, "tombstones"),
+        index_store.component_path(index_dir, "vecbatches"),
+        "vec_id",
+    )
     scored = cand.join(F.broadcast(lut), lut_keys)
     adc = None
     for s in range(m):

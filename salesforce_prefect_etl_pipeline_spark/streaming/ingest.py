@@ -34,11 +34,13 @@ from __future__ import annotations
 
 import os
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from salesforce_prefect_etl_pipeline_spark.operators import index_store
 from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
     band_key_array,
     minhash_near_dup_pairs,
@@ -75,19 +77,60 @@ def greedy_accept(
     return accepted
 
 
+def _run_available_now(
+    stream: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None],
+    name: str,
+    checkpoint_dir: str | None,
+) -> None:
+    """Drain ``stream`` through ``batch_fn`` with Trigger.AvailableNow,
+    skipping empty micro-batches, under the pinned stream shuffle. With
+    no ``checkpoint_dir`` the checkpoint lives in a temporary directory
+    removed afterwards."""
+
+    def each(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            batch_fn(batch_df, batch_id)
+
+    ctx = (
+        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
+        if checkpoint_dir is None
+        else None
+    )
+    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
+    try:
+        with pinned_stream_shuffle(stream.sparkSession):
+            (
+                stream.writeStream.foreachBatch(each)
+                .outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+    finally:
+        if ctx is not None:
+            ctx.cleanup()
+
+
+def _committed(spark: SparkSession, index_dir: str, record: str) -> set[str]:
+    """The committed batch ids of an index's commit record, resolved
+    through the version pointer (empty before the first commit) — the
+    sinks' replay guard: a replayed ALREADY-committed batch is skipped
+    with batch-count-bounded driver state."""
+    path = index_store.component_path(index_dir, record)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        return set()
+    return index_store.committed_ids(spark, path)
+
+
 def _append_profile_to_index(prof: DataFrame, index_dir: str) -> None:
     """Append accepted docs' bands + profiles (an already-computed
     minhash_profile frame) to the persisted index — same layout as
     build_minhash_index, parquet append mode. Appends resolve the
-    component through the version pointer (index_component_path) so
-    they land in the CURRENT snapshot after a compaction has
-    versioned the index; appends must not run concurrently WITH a
-    compaction (same single-owner contract, see
-    compact_minhash_index)."""
-    from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-        index_component_path,
-    )
-
+    component through the version pointer so they land in the CURRENT
+    snapshot after a compaction has versioned the index (see
+    ``index_store`` for the single-owner contract)."""
     banded = prof.select(
         "doc_id", F.posexplode(band_key_array(F.col("sig"))).alias("band", "key")
     )
@@ -96,10 +139,10 @@ def _append_profile_to_index(prof: DataFrame, index_dir: str) -> None:
         .sortWithinPartitions("key")
         .write.mode("append")
         .partitionBy("band")
-        .parquet(index_component_path(index_dir, "bands"))
+        .parquet(index_store.component_path(index_dir, "bands"))
     )
     prof.select("doc_id", "shingles").write.mode("append").parquet(
-        index_component_path(index_dir, "profiles")
+        index_store.component_path(index_dir, "profiles")
     )
 
 
@@ -134,8 +177,6 @@ def stream_dedup_on_ingest(
     spark = stream_docs.sparkSession
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df = batch_df.select("doc_id", "text")
         # enforce the driver-state contract BEFORE anything is
         # collected, and failing fast beats an OOM'd driver
@@ -167,12 +208,8 @@ def stream_dedup_on_ingest(
         # profile would silently drop it from the corpus instead of
         # accepting it (it can't near-dup anything it doesn't shingle).
         prof = minhash_profile(batch_df, k).localCheckpoint(eager=True)
-        from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-            index_component_path,
-        )
-
         has_index = os.path.exists(
-            os.path.join(index_component_path(index_dir, "bands"), "_SUCCESS")
+            os.path.join(index_store.component_path(index_dir, "bands"), "_SUCCESS")
         )
         if distributed_accept:
             # everything stays a DataFrame: within-batch + vs-index
@@ -263,25 +300,7 @@ def stream_dedup_on_ingest(
             pairs_df.unpersist()
             keep_df.unpersist()
 
-    ctx = (
-        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
-    )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                stream_docs.writeStream.foreachBatch(_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
+    _run_available_now(stream_docs, _batch, name, checkpoint_dir)
     return accepted_dir
 
 
@@ -326,54 +345,23 @@ def stream_text_index_ingest(
 
     spark = stream_docs.sparkSession
 
-    def _committed(record_path: str) -> set[str]:
-        if not os.path.exists(os.path.join(record_path, "_SUCCESS")):
-            return set()
-        return {
-            r["batch_id"]
-            for r in spark.read.parquet(record_path).select("batch_id").collect()
-        }  # one row per batch — control-plane sized
-
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         b = batch_df.select("doc_id", "text")
         # content-derived id from a doc_id-only aggregate (no tokenize);
         # the stamped append itself is _write_index_batch's single
         # tokenizing scan (r15 verdict task 7). Resolve through the
         # version pointer (r15 layout): a compacted index keeps
         # ingesting into its live snapshot.
-        bid = retrieval._batch_id_agg(b).collect()[0]["batch_id"]
-        tpath = retrieval._comp(index_dir, "totals")
-        if bid not in _committed(tpath):
+        bid = index_store.collect_batch_id(b, "doc_id")
+        if bid not in _committed(spark, index_dir, "totals"):
             retrieval._write_index_batch(b, index_dir, "append", analyzer, bid=bid)
-        if positional and bid not in _committed(
-            retrieval._comp(index_dir, "posbatches")
-        ):
+        if positional and bid not in _committed(spark, index_dir, "posbatches"):
             # the positional tier's own stamped write + commit record;
             # guarded separately so a crash between the two tiers'
             # appends replays only the missing one
             retrieval._write_positional_batch(b, index_dir, "append", analyzer)
 
-    ctx = (
-        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
-    )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                stream_docs.writeStream.foreachBatch(_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
+    _run_available_now(stream_docs, _batch, name, checkpoint_dir)
     return index_dir
 
 
@@ -414,43 +402,14 @@ def stream_ivf_index_ingest(
         else similarity.load_ivf_centroids(spark, index_dir)
     )
 
-    def _committed(record_path: str) -> set[str]:
-        if not os.path.exists(os.path.join(record_path, "_SUCCESS")):
-            return set()
-        return {
-            r["batch_id"]
-            for r in spark.read.parquet(record_path).select("batch_id").collect()
-        }  # one row per batch — control-plane sized
-
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         b = batch_df.select("vec_id", "embedding")
-        bid = similarity._ivf_batch_id(b)
-        vb = similarity.ivf_component_path(index_dir, "vecbatches")
-        if bid in _committed(vb):
-            return
-        similarity.append_ivf_vectors(spark, index_dir, b, centroids=cents)
+        if index_store.collect_batch_id(b, "vec_id", "ivf") not in _committed(
+            spark, index_dir, "vecbatches"
+        ):
+            similarity.append_ivf_vectors(spark, index_dir, b, centroids=cents)
 
-    ctx = (
-        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
-    )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                stream_emb.writeStream.foreachBatch(_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
+    _run_available_now(stream_emb, _batch, name, checkpoint_dir)
     return index_dir
 
 
@@ -571,51 +530,17 @@ def stream_retract_ingest(
 
     spark = stream_docs.sparkSession
 
-    def _committed(record_path: str) -> set[str]:
-        if not os.path.exists(os.path.join(record_path, "_SUCCESS")):
-            return set()
-        return {
-            r["batch_id"]
-            for r in spark.read.parquet(record_path).select("batch_id").collect()
-        }  # one row per batch — control-plane sized
-
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         b = batch_df.select("doc_id", "text")
-        bid = retrieval._batch_id_agg(b, prefix="retract").collect()[0][
-            "batch_id"
-        ]
-        if bid not in _committed(retrieval._comp(index_dir, "totals")):
+        bid = index_store.collect_batch_id(b, "doc_id", "retract")
+        if bid not in _committed(spark, index_dir, "totals"):
             retrieval.retract_text_index(b, index_dir, analyzer)
         if positional:
-            pbid = retrieval._batch_id_agg(b, prefix="retractpos").collect()[
-                0
-            ]["batch_id"]
-            if pbid not in _committed(
-                retrieval._comp(index_dir, "posbatches")
-            ):
+            pbid = index_store.collect_batch_id(b, "doc_id", "retractpos")
+            if pbid not in _committed(spark, index_dir, "posbatches"):
                 retrieval.retract_positional_index(b, index_dir)
 
-    ctx = (
-        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
-    )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                stream_docs.writeStream.foreachBatch(_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
+    _run_available_now(stream_docs, _batch, name, checkpoint_dir)
     return index_dir
 
 
@@ -638,53 +563,14 @@ def stream_ivf_retract_ingest(
 
     spark = stream_ids.sparkSession
 
-    def _committed(record_path: str) -> set[str]:
-        if not os.path.exists(os.path.join(record_path, "_SUCCESS")):
-            return set()
-        return {
-            r["batch_id"]
-            for r in spark.read.parquet(record_path).select("batch_id").collect()
-        }
-
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         ids = batch_df.select(
             F.col(batch_df.columns[0]).cast("long").alias("vec_id")
         ).distinct()
-        bid = ids.agg(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit("retractivf"),
-                    F.min("vec_id"),
-                    F.max("vec_id"),
-                    F.count(F.lit(1)),
-                )
-            ).alias("batch_id")
-        ).collect()[0]["batch_id"]
-        vb = similarity.ivf_component_path(index_dir, "vecbatches")
-        if bid in _committed(vb):
-            return
-        similarity.retract_ivf_vectors(spark, index_dir, ids)
+        if index_store.collect_batch_id(ids, "vec_id", "retractivf") not in _committed(
+            spark, index_dir, "vecbatches"
+        ):
+            similarity.retract_ivf_vectors(spark, index_dir, ids)
 
-    ctx = (
-        tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_")
-        if checkpoint_dir is None
-        else None
-    )
-    ckpt = checkpoint_dir if checkpoint_dir is not None else ctx.name
-    try:
-        with pinned_stream_shuffle(spark):
-            q = (
-                stream_ids.writeStream.foreachBatch(_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if ctx is not None:
-            ctx.cleanup()
+    _run_available_now(stream_ids, _batch, name, checkpoint_dir)
     return index_dir

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from salesforce_prefect_etl_pipeline_spark.operators import dedup, similarity, text
+from salesforce_prefect_etl_pipeline_spark.operators import dedup, index_store, similarity, text
 from salesforce_prefect_etl_pipeline_spark.plans import load_table
 
 from tests.conftest import SF_SMALL
@@ -339,7 +339,7 @@ def test_ivf_rebuild_is_snapshot_isolated(spark, emb, tmp_path):
     cents_fresh = similarity.build_ivf_index(emb, index_dir, nlist=16, iters=0)
     assert not os.path.exists(os.path.join(index_dir, "CURRENT"))
     assert not os.path.exists(os.path.join(index_dir, "versions"))
-    assert similarity.ivf_component_path(index_dir, "lists") == os.path.join(
+    assert index_store.component_path(index_dir, "lists") == os.path.join(
         index_dir, "lists"
     )
     assert (similarity.load_ivf_centroids(spark, index_dir) == cents_fresh).all()
@@ -1155,7 +1155,7 @@ def test_compact_minhash_index_preserves_probes_and_drops_tombstones(spark, docs
     assert os.path.isdir(os.path.join(idx, "versions", "v2", "bands"))
     assert os.path.isdir(os.path.join(idx, "versions", "v1", "bands"))
     assert not os.path.exists(os.path.join(idx, "bands"))
-    assert dedup.index_component_path(idx, "bands").endswith(
+    assert index_store.component_path(idx, "bands").endswith(
         os.path.join("versions", "v2", "bands")
     )
 
@@ -1197,7 +1197,7 @@ def test_compaction_publish_is_snapshot_isolated(spark, docs, tmp_path):
 
     assert os.path.isdir(os.path.join(idx, "versions", "v1", "bands"))
     grown = spark.read.parquet(
-        dedup.index_component_path(idx, "profiles")
+        index_store.component_path(idx, "profiles")
     ).count()
     base = corpus_side.count()
     assert grown == base + increment.count()
@@ -1207,7 +1207,7 @@ def test_compaction_publish_is_snapshot_isolated(spark, docs, tmp_path):
     dedup.build_minhash_index(corpus_side, idx)
     assert not os.path.exists(os.path.join(idx, "CURRENT"))
     assert not os.path.exists(os.path.join(idx, "versions"))
-    assert dedup.index_component_path(idx, "bands") == os.path.join(idx, "bands")
+    assert index_store.component_path(idx, "bands") == os.path.join(idx, "bands")
     rebuilt = sorted(
         set(
             (r.da, r.db, r.jaccard)
@@ -1258,6 +1258,127 @@ def test_version_retention_bounded_across_many_publishes(spark, docs, emb, tmp_p
     assert sorted(os.listdir(os.path.join(ivf, "versions"))) == ["v2", "v3"]
     assert not os.path.exists(os.path.join(ivf, "lists"))
     assert not os.path.exists(os.path.join(ivf, "centroids"))
+
+
+def _publish_families(spark, docs, emb):
+    """(build, maintain, probe) per index family on the shared small
+    fixtures: MinHash (replay-appended build -> compaction), IVF
+    (iters=0 build -> rebuild) and text (build + append + retraction ->
+    compaction)."""
+    from salesforce_prefect_etl_pipeline_spark.operators import retrieval
+    from salesforce_prefect_etl_pipeline_spark.operators.corpus import split_bucket
+    from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
+        _append_profile_to_index,
+    )
+
+    corpus_side = docs.filter(split_bucket(F.col("doc_id")) < 80)
+    increment = docs.filter(split_bucket(F.col("doc_id")) >= 80)
+    qvecs = [
+        (r.vec_id, list(r.embedding))
+        for r in emb.filter(F.col("vec_id").isin([1, 7, 42])).collect()
+    ]
+    texts = spark.createDataFrame(
+        [
+            (0, "spark join slow window"),
+            (1, "window stream agg window stream"),
+            (2, "customer query big table customer spark"),
+            (3, "spark spark join join slow fast"),
+            (4, "spark table query slow join"),
+            (5, "big table window stream"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def minhash_build(idx):
+        dedup.build_minhash_index(corpus_side, idx)
+        _append_profile_to_index(dedup.minhash_profile(corpus_side, 8), idx)
+
+    def text_build(idx):
+        retrieval.build_text_index(texts.filter("doc_id < 4"), idx)
+        retrieval.append_text_index(texts.filter("doc_id >= 4"), idx)
+        retrieval.retract_text_index(texts.filter("doc_id = 1"), idx)
+
+    return {
+        "minhash": (
+            minhash_build,
+            lambda idx: dedup.compact_minhash_index(spark, idx),
+            lambda idx: sorted(
+                set(
+                    tuple(r)
+                    for r in dedup.probe_minhash_index(spark, idx, increment).collect()
+                )
+            ),
+        ),
+        "ivf": (
+            lambda idx: similarity.build_ivf_index(emb, idx, nlist=16, iters=0),
+            lambda idx: similarity.rebuild_ivf_index(emb, idx, nlist=16, iters=0),
+            lambda idx: [
+                tuple(r)
+                for r in similarity.probe_ivf(spark, idx, qvecs, k=10, nprobe=4).collect()
+            ],
+        ),
+        "text": (
+            text_build,
+            lambda idx: retrieval.compact_text_index(spark, idx),
+            lambda idx: [
+                tuple(r) for r in retrieval.probe_text_index(spark, idx).collect()
+            ],
+        ),
+    }
+
+
+def _index_files(idx):
+    """Every file under an index dir, relative, with the per-write uuid
+    Spark puts in part-file names masked."""
+    import os
+    import re
+
+    uuid = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+    return sorted(
+        uuid.sub("*", os.path.relpath(os.path.join(root, f), idx))
+        for root, _, files in os.walk(idx)
+        for f in files
+    )
+
+
+@pytest.mark.parametrize("family", ["minhash", "ivf", "text"])
+def test_crash_mid_publish_keeps_current_and_rerun_converges(
+    spark, docs, emb, tmp_path, monkeypatch, family
+):
+    """A maintenance run that dies at the pointer swap, after the new
+    version is fully written: CURRENT is unchanged, probes still equal
+    the pre-maintenance probes, and re-running the maintenance
+    converges to the same files and probe results as a run that was
+    never interrupted."""
+    import os
+    import shutil
+
+    build, maintain, probe = _publish_families(spark, docs, emb)[family]
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    build(crashed)
+    maintain(crashed)  # publishes v1: the crash below hits a versioned index
+    shutil.copytree(crashed, clean)
+    before = probe(crashed)
+    swaps = []
+
+    def crash(src, dst):
+        swaps.append(os.path.basename(dst))
+        raise OSError("killed at the pointer swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(index_store.os, "replace", crash)
+        with pytest.raises(OSError, match="pointer swap"):
+            maintain(crashed)
+    assert swaps == ["CURRENT"]
+    assert os.path.isdir(os.path.join(crashed, "versions", "v2"))
+    assert index_store.current_version(crashed) == "v1"
+    assert probe(crashed) == before
+
+    maintain(crashed)
+    maintain(clean)
+    assert index_store.current_version(crashed) == "v2"
+    assert _index_files(crashed) == _index_files(clean)
+    assert probe(crashed) == probe(clean)
 
 
 def test_concurrent_probes_during_maintenance(spark, docs, emb, tmp_path):
@@ -1839,9 +1960,9 @@ def test_ivf_retraction_equals_never_ingested_and_compacts(spark, emb, tmp_path)
 
     # (4) rebalance = compaction: physical drop, no tombstone component
     similarity.rebalance_ivf_index(spark, idx, nlist=16, iters=0, seed_emb=emb)
-    raw = spark.read.parquet(similarity.ivf_component_path(idx, "lists"))
+    raw = spark.read.parquet(index_store.component_path(idx, "lists"))
     assert raw.filter(F.col("vec_id").isin(dead_ids)).count() == 0
-    assert not _os.path.isdir(similarity.ivf_component_path(idx, "tombstones"))
+    assert not _os.path.isdir(index_store.component_path(idx, "tombstones"))
     assert raw.count() == live.count()
 
     # (5) unstamped legacy layout refuses
@@ -1973,7 +2094,7 @@ def test_ivfpq_codes_respect_reconcile_and_retraction(spark, emb, tmp_path):
     # rebuilding the codes after the retraction physically drops them
     similarity.build_ivfpq_codes(spark, index_dir, books)
     rebuilt = spark.read.parquet(
-        similarity.ivf_component_path(index_dir, "pqcodes")
+        index_store.component_path(index_dir, "pqcodes")
     )
     assert rebuilt.filter(F.col("vec_id").isin(dead_ids)).count() == 0
     assert [
@@ -2005,7 +2126,7 @@ def test_ivfpq_residual_layout_contract(spark, emb, tmp_path):
     books = similarity.train_pq_codebooks(emb, m=4, codes=16, iters=0)
     similarity.build_ivfpq_codes(spark, index_dir, books)
     plain_before = spark.read.parquet(
-        similarity.ivf_component_path(index_dir, "pqcodes")
+        index_store.component_path(index_dir, "pqcodes")
     ).collect()
 
     cents = similarity.load_ivf_centroids(spark, index_dir)
@@ -2063,7 +2184,7 @@ def test_ivfpq_residual_layout_contract(spark, emb, tmp_path):
 
     # (4) parallel components: the plain layout is untouched
     plain_after = spark.read.parquet(
-        similarity.ivf_component_path(index_dir, "pqcodes")
+        index_store.component_path(index_dir, "pqcodes")
     ).collect()
     assert sorted(map(tuple, plain_after)) == sorted(map(tuple, plain_before))
 
@@ -2109,12 +2230,12 @@ def test_ivfpq_residual_gain_on_clustered_corpus(spark, tmp_path):
 
     plain_err = (
         spark.read.parquet(
-            similarity.ivf_component_path(index_dir, "pqcodes")
+            index_store.component_path(index_dir, "pqcodes")
         ).agg(F.avg("qerr")).collect()[0][0]
     )
     resid_err = (
         spark.read.parquet(
-            similarity.ivf_component_path(index_dir, "pqrescodes")
+            index_store.component_path(index_dir, "pqrescodes")
         ).agg(F.avg("qerr")).collect()[0][0]
     )
     # not just "less": an order of magnitude, because between-cluster

@@ -126,11 +126,30 @@ def test_rechunk_splits_single_group_files_and_guard_math(tmp_path):
     assert rc.expected_min_groups(5_000_000) == 16
 
 
+def test_layout_guard_rejects_single_group_file_until_rechunked(tmp_path):
+    """check_layout is the post-condition gen_scale_data asserts: a
+    100,000-row, single-row-group file fails it with the LAYOUT GUARD
+    message, and passes once rechunk_scaledata.main has rewritten it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    import rechunk_scaledata as rc
+
+    n = 100_000
+    path = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"k": list(range(n))}), path, row_group_size=n)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    assert rc.expected_min_groups(n) > 1
+    with pytest.raises(SystemExit, match="LAYOUT GUARD"):
+        rc.check_layout(str(tmp_path))
+    rc.main([str(tmp_path)])
+    rc.check_layout(str(tmp_path))
+
+
 def test_gen_scale_data_wires_the_layout_guard():
     """gen_scale_data must rechunk its own output and assert the row-
     group post-condition — the r16 regeneration skipped the separate
     rechunk step and produced an unsplittable 57 MB-row-group fixture."""
     src = open(os.path.join(REPO, "tools", "gen_scale_data.py")).read()
-    assert "rechunk_scaledata.main" in src
-    assert "expected_min_groups" in src
-    assert "LAYOUT GUARD" in src
+    assert "rechunk_scaledata.main" in src and "check_layout" in src

@@ -614,7 +614,7 @@ def test_stream_ivf_index_ingest_multi_batch_equals_monolithic(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from salesforce_prefect_etl_pipeline_spark.operators import similarity
+    from salesforce_prefect_etl_pipeline_spark.operators import index_store, similarity
     from salesforce_prefect_etl_pipeline_spark.plans import load_table
     from salesforce_prefect_etl_pipeline_spark.streaming.ingest import (
         stream_documents_dir,
@@ -677,7 +677,7 @@ def test_stream_ivf_index_ingest_multi_batch_equals_monolithic(spark, tmp_path):
     # torn batch: stamped list rows land, no vecbatches record -> the
     # probe is unchanged
     tear = emb.filter(F.col("vec_id").isin([1, 7]))
-    bid = similarity._ivf_batch_id(tear)
+    bid = index_store.collect_batch_id(tear, "vec_id", "ivf")
     similarity.ivf_assign(tear, cents).withColumn(
         "batch_id", F.lit("torn-" + bid)
     ).write.mode("append").partitionBy("list_id").parquet(f"{index_dir}/lists")
@@ -790,7 +790,7 @@ def test_stream_retract_torn_and_replayed_batches_are_exactly_once(
     batch id)."""
     from pyspark.sql import functions as F
 
-    from salesforce_prefect_etl_pipeline_spark.operators import retrieval
+    from salesforce_prefect_etl_pipeline_spark.operators import index_store, retrieval
     from salesforce_prefect_etl_pipeline_spark.plans import load_table
     from tests.conftest import SF_SMALL
 
@@ -801,9 +801,7 @@ def test_stream_retract_torn_and_replayed_batches_are_exactly_once(
     full = [tuple(r) for r in retrieval.probe_text_index(spark, idx).collect()]
 
     # (a) tear: tombstones land, the negative totals row does not
-    bid = retrieval._batch_id_agg(dead, prefix="retract").collect()[0][
-        "batch_id"
-    ]
+    bid = index_store.collect_batch_id(dead, "doc_id", "retract")
     dead.select("doc_id").distinct().withColumn(
         "batch_id", F.lit(bid)
     ).write.mode("append").parquet(f"{idx}/tombstones")

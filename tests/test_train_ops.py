@@ -15,7 +15,12 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from salesforce_prefect_etl_pipeline_spark.operators import retrieval, similarity, train
+from salesforce_prefect_etl_pipeline_spark.operators import (
+    index_store,
+    retrieval,
+    similarity,
+    train,
+)
 
 
 def _docs(spark, texts):
@@ -1382,7 +1387,7 @@ def test_single_batch_append_created_index_still_dedups_replay(
     docs = _docs(spark, _LIFECYCLE_TEXTS)
     idx = str(tmp_path / "idx")
     # tear: the append's postings land, the totals commit record doesn't
-    bid = retrieval._batch_id_agg(docs).collect()[0]["batch_id"]
+    bid = index_store.collect_batch_id(docs, "doc_id")
     retrieval._postings(docs).withColumn(
         "batch_id", F.lit(bid)
     ).write.mode("append").partitionBy("bucket").parquet(f"{idx}/postings")
@@ -1398,7 +1403,7 @@ def test_single_batch_append_created_index_still_dedups_replay(
     want = [tuple(r) for r in retrieval.probe_text_index(spark, mono).collect()]
     assert got == want and got
     # the positional tier's marker carries the same provenance contract
-    pbid = retrieval._batch_id_agg(docs).collect()[0]["batch_id"]
+    pbid = index_store.collect_batch_id(docs, "doc_id")
     tok = docs.select(
         "doc_id",
         F.posexplode(retrieval._ANALYZERS["raw"][0]("text")).alias(
@@ -1459,8 +1464,6 @@ def test_index_batch_write_is_single_tokenizing_scan(spark, tmp_path):
     aggregate (Catalyst prunes the text column — no second tokenize)
     and the totals derived from the written postings equal the
     reference double-scan aggregate bit-for-bit."""
-    import pyspark.sql.functions as F
-
     from salesforce_prefect_etl_pipeline_spark.plans import load_table
     from tests.conftest import SF_SMALL
 
@@ -1482,7 +1485,9 @@ def test_index_batch_write_is_single_tokenizing_scan(spark, tmp_path):
     spark.catalog.clearCache()
     docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
     # column pruning: the id aggregate's scan reads doc_id only
-    assert "text" not in _read_schema_lines(retrieval._batch_id_agg(docs))
+    assert "text" not in _read_schema_lines(
+        docs.agg(index_store.batch_id("doc_id"))
+    )
     idx = str(tmp_path / "idx")
     retrieval.build_text_index(docs, idx)
     got = spark.read.parquet(f"{idx}/totals").collect()[0]
@@ -1494,20 +1499,8 @@ def test_index_batch_write_is_single_tokenizing_scan(spark, tmp_path):
     )
     assert got["origin"] == "build"
     # IVF twin: the vector batch id aggregate prunes to vec_id only
-    from salesforce_prefect_etl_pipeline_spark.operators import similarity
-
     emb = load_table(spark, SF_SMALL, "embeddings")
-    id_agg = emb.agg(
-        F.md5(
-            F.concat_ws(
-                ":",
-                F.lit("ivf"),
-                F.min("vec_id"),
-                F.max("vec_id"),
-                F.count(F.lit(1)),
-            )
-        ).alias("batch_id")
-    )
+    id_agg = emb.agg(index_store.batch_id("vec_id", "ivf"))
     assert "embedding" not in _read_schema_lines(id_agg)
 
 
@@ -1518,8 +1511,8 @@ def test_gc_index_versions_matrix(spark, tmp_path):
     and probes are identical before/after."""
     import os as _os
 
-    from salesforce_prefect_etl_pipeline_spark.operators.dedup import (
-        gc_index_versions,
+    from salesforce_prefect_etl_pipeline_spark.operators.index_store import (
+        gc_versions as gc_index_versions,
     )
 
     docs = _docs(spark, _LIFECYCLE_TEXTS)
@@ -1576,7 +1569,7 @@ def test_text_index_stats_flags_fragmentation_then_goes_quiet(
         retrieval.append_positional_index(b, idx)
     # a torn+replayed batch leaves replay dups on disk
     extra = docs.filter("doc_id >= 28")
-    bid = retrieval._batch_id_agg(extra).collect()[0]["batch_id"]
+    bid = index_store.collect_batch_id(extra, "doc_id")
     retrieval._postings(extra).withColumn(
         "batch_id", F.lit(bid)
     ).write.mode("append").partitionBy("bucket").parquet(f"{idx}/postings")
@@ -1743,3 +1736,57 @@ def test_stemmed_bm25_probe_equals_direct_and_recalls_inflections(
         ).collect()
     ]
     assert probed == direct
+
+
+def test_text_index_lifecycle_job_counts_are_pinned(spark, tmp_path):
+    """Exact Spark job counts per text-index operation on a small
+    all-tier fixture (BM25 + champions + positional), read from a
+    StatusTracker job group. Every parquet read infers its schema in a
+    job and every collect, count and write is one more, so a change to
+    the shared read/commit machinery that adds an action fails here."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def jobs(fn) -> int:
+        group = f"text-index-pin-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    docs = _docs(spark, _LIFECYCLE_TEXTS * 2)
+    idx = str(tmp_path / "idx")
+    _build_all_tiers(spark, docs.filter("doc_id < 12"), idx)
+
+    def probe():
+        retrieval.probe_text_index(spark, idx).collect()
+
+    got = {
+        "probe": jobs(probe),
+        "append": jobs(
+            lambda: retrieval.append_text_index(docs.filter("doc_id >= 12"), idx)
+        ),
+        "probe_appended": jobs(probe),
+        "retract": jobs(
+            lambda: retrieval.retract_text_index(
+                docs.filter("doc_id IN (3, 13)"), idx
+            )
+        ),
+        "probe_retracted": jobs(probe),
+        "compact": jobs(lambda: retrieval.compact_text_index(spark, idx)),
+        "probe_compacted": jobs(probe),
+    }
+    assert got == {
+        "probe": 14,
+        "append": 9,
+        "probe_appended": 15,
+        "retract": 5,
+        "probe_retracted": 21,
+        "compact": 54,
+        "probe_compacted": 14,
+    }

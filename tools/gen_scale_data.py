@@ -30,7 +30,6 @@ Usage: python tools/gen_scale_data.py [--replicas 10]
 from __future__ import annotations
 
 import argparse
-import glob as glob_mod
 import os
 import random
 import string
@@ -167,21 +166,12 @@ def main() -> None:
     # big tables unsplittable — sf10's 57 MB single-group documents file
     # serialized every text kernel and inflated the ladder point 2.4x.
     # Rechunking is part of generation, not a separate step a caller can
-    # forget; the assert makes a silent revert impossible.
-    import pyarrow.parquet as pq
-
+    # forget; the guard makes a silent revert impossible.
     sys.path.insert(0, str(Path(__file__).resolve().parent))
     import rechunk_scaledata
 
     rechunk_scaledata.main([args.out])
-    for path in sorted(glob_mod.glob(os.path.join(args.out, "*.parquet"))):
-        meta = pq.ParquetFile(path).metadata
-        want = rechunk_scaledata.expected_min_groups(meta.num_rows)
-        if meta.num_row_groups < want:
-            raise SystemExit(
-                f"LAYOUT GUARD: {path} has {meta.num_row_groups} row "
-                f"groups, expected >= {want} for {meta.num_rows} rows"
-            )
+    rechunk_scaledata.check_layout(args.out)
     print(f"done -> {args.out}")
 
 

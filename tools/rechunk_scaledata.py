@@ -60,6 +60,21 @@ def expected_min_groups(
     return max(1, n_rows // rows_per_group)
 
 
+def check_layout(out_dir: str) -> None:
+    """Layout guard: raise ``SystemExit`` naming the first parquet file
+    under ``out_dir`` with fewer row groups than
+    :func:`expected_min_groups` allows — the post-condition a
+    regenerated fixture must meet after :func:`main` rechunks it."""
+    for path in sorted(glob.glob(os.path.join(out_dir, "*.parquet"))):
+        meta = pq.ParquetFile(path).metadata
+        want = expected_min_groups(meta.num_rows)
+        if meta.num_row_groups < want:
+            raise SystemExit(
+                f"LAYOUT GUARD: {path} has {meta.num_row_groups} row "
+                f"groups, expected >= {want} for {meta.num_rows} rows"
+            )
+
+
 def main(
     dirs: list[str] | None = None,
     target_groups: int = TARGET_GROUPS,
@@ -74,7 +89,9 @@ def main(
             f = pq.ParquetFile(path)
             n = f.metadata.num_rows
             rows_per_group = max(min_rows_per_group, n // target_groups)
-            if f.metadata.num_row_groups >= max(1, n // rows_per_group):
+            if f.metadata.num_row_groups >= expected_min_groups(
+                n, target_groups, min_rows_per_group
+            ):
                 print(f"skip {path}: already {f.metadata.num_row_groups} groups")
                 continue
             before = checksum(con, path)
